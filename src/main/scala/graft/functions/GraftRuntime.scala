@@ -1,9 +1,12 @@
 package graft.functions
 
+import org.apache.logging.log4j.LogManager
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Expression
 
+import graft.io.Sessions
 import graft.plans.AsOfJoinStrategy
 
 /** Runtime installation of the engine's extensions onto an EXISTING
@@ -14,11 +17,34 @@ import graft.plans.AsOfJoinStrategy
   * into the session function registry and the as-of strategy into
   * `spark.experimental.extraStrategies` (both public, runtime-safe,
   * idempotent). Also flips the nanos-timestamp legacy flag the harness
-  * events table needs.
+  * events table needs. Artifact isolation cannot be turned off on a
+  * live session, so a host session that has it on gets one WARN per
+  * SparkContext instead ([[warnIfIsolated]]).
   */
 object GraftRuntime {
 
+  private val log = LogManager.getLogger(getClass)
+
+  /** SparkContexts already warned about artifact isolation (weak keys). */
+  private val isolationWarned = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkContext, java.lang.Boolean]())
+
+  /** WARN once per SparkContext when `spark` runs with session artifact
+    * isolation on (see [[graft.io.Sessions]]); returns whether it warned. */
+  private[graft] def warnIfIsolated(spark: SparkSession): Boolean = {
+    val warn = spark.conf.get(Sessions.ArtifactIsolation).toBoolean &&
+      isolationWarned.putIfAbsent(spark.sparkContext, java.lang.Boolean.TRUE) == null
+    if (warn)
+      log.warn(s"${Sessions.ArtifactIsolation}=true on this session: each session's " +
+        "tasks run under their own executor class loader, so every new session " +
+        "recompiles every generated class (and looks up missed classes through " +
+        "the driver over RPC). Build the session with " +
+        s"${Sessions.ArtifactIsolation}=false (graft.io.Sessions) to compile once per JVM.")
+    warn
+  }
+
   def ensure(spark: SparkSession): Unit = {
+    warnIfIsolated(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // the engine's cross-engine determinism contract is UTC wall-clock
     // arithmetic (docs/determinism.md); a host session left on a local

@@ -15,14 +15,31 @@ import org.apache.spark.sql.SparkSession
   *  - `spark.sql.legacy.parquet.nanosAsLong=true`: the harness `events`
   *    table stores TIMESTAMP(NANOS) which Spark 4 otherwise refuses
   *    (PARQUET_TYPE_ILLEGAL); we read the raw ns longs and convert in
-  *    [[Tables]].
+  *    [[Tables]];
+  *  - session artifact isolation off ([[ArtifactIsolation]]): the engine
+  *    adds no session artifacts (no `addArtifact`/`addJar`), and with
+  *    isolation on (the Spark 4 default) every session's tasks run under
+  *    their own executor class loader. `CodeGenerator`'s cache is keyed by
+  *    class loader, so each new session (every `newSession()`, every
+  *    streaming query's clone) recompiles every generated class, and each
+  *    class name janino misses is looked up through the driver over RPC.
+  *    Off, tasks run on the executor's shared loader and a class compiles
+  *    once per JVM. The conf is read only when a session is created
+  *    ([[withSharedClassLoader]] states it for every builder).
   */
 object Sessions {
   def defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
+  /** Spark's per-session artifact isolation conf; fixed at session creation. */
+  val ArtifactIsolation = "spark.sql.artifact.isolation.enabled"
+
+  /** The engine's class-loader setting, for any session builder (the local
+    * factory here and `DistMain`'s cluster path). */
+  def withSharedClassLoader(builder: SparkSession.Builder): SparkSession.Builder =
+    builder.config(ArtifactIsolation, "false")
+
   def local(appName: String = "graft", cpus: String = defaultCpus): SparkSession = {
-    val spark = SparkSession
-      .builder()
+    val spark = withSharedClassLoader(SparkSession.builder())
       .appName(appName)
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

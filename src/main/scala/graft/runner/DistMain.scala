@@ -43,7 +43,8 @@ object DistMain {
         opts.get("m").foreach(m => System.setProperty("spark.driver.memory", m))
         if (opts.contains("u")) System.setProperty("spark.ui.enabled", "true")
         Sessions.local("graft-dist", opts.getOrElse("L", Sessions.defaultCpus))
-      } else SparkSession.builder().appName("graft-dist").getOrCreate()
+      } else Sessions.withSharedClassLoader(SparkSession.builder())
+        .appName("graft-dist").getOrCreate()
     try run(opts, spark)
     finally Sessions.stop(spark)
   }
@@ -194,7 +195,9 @@ object DistMain {
     * checkpoint under `<dest>/_checkpoint` — re-running the direction
     * processes ONLY files added since the last run (exactly-once
     * incremental backfill; stateless or windowed-append transforms).
-    * Self-describing file formats only. */
+    * Self-describing file formats only. A source directory with no data
+    * files yet is a no-op (no query starts, no checkpoint is written); a
+    * missing source path fails with an IllegalArgumentException. */
   private val streamFormats = Map(
     "hadoopParquet" -> "parquet", "hadoopJson" -> "json", "hadoopOrc" -> "orc")
 
@@ -203,7 +206,19 @@ object DistMain {
       throw new IllegalArgumentException(
         s"streaming tasks support ${streamFormats.keys.mkString("/")}, got '$adapter'"))
     val (inFmt, outFmt) = (fmt(task.source.adapter), fmt(task.dest.adapter))
-    val schema = spark.read.format(inFmt).load(task.source.path).schema
+    val src = new Path(task.source.path)
+    val srcFs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (Option(srcFs.globStatus(src)).forall(_.isEmpty))
+      throw new IllegalArgumentException(
+        s"streaming source path does not exist: ${task.source.path}")
+    val schema =
+      try spark.read.format(inFmt).load(task.source.path).schema
+      catch {
+        case e: org.apache.spark.sql.AnalysisException
+            if e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
+          println(s"[dist] streaming ${task.source.path}: no input yet")
+          return
+      }
     val stream = spark.readStream.format(inFmt).schema(schema).load(task.source.path)
     val transformed = task.transform match {
       case Some(sql) =>

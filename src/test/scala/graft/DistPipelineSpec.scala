@@ -612,6 +612,45 @@ class DistPipelineSpec extends SparkSpec {
     assert(spark.read.parquet(s"$base/out").count() == 30)
   }
 
+  test("streaming task with no input yet: an empty source directory is a no-op") {
+    val base = tmpDir("dist")
+    Files.createDirectories(Paths.get(s"$base/in_pq"))
+    Files.createDirectories(Paths.get(s"$base/in_json"))
+    val conf = DistConfig.parse(s"""{"d": [
+      {"streaming": true,
+       "source": {"adapter": "hadoopParquet", "path": "$base/in_pq"},
+       "dest":   {"adapter": "hadoopParquet", "path": "$base/out_pq"}},
+      {"streaming": true,
+       "source": {"adapter": "hadoopJson", "path": "$base/in_json"},
+       "dest":   {"adapter": "hadoopJson", "path": "$base/out_json"}}]}""")
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out)(DistMain.runDirection(spark, conf.direction("d"), "d"))
+    val lines = out.toString.linesIterator.toSeq
+    assert(lines.contains(s"[dist] streaming $base/in_pq: no input yet"))
+    assert(lines.contains(s"[dist] streaming $base/in_json: no input yet"))
+    // no query started: no checkpoint, no output
+    assert(!Files.exists(Paths.get(s"$base/out_pq")))
+    assert(!Files.exists(Paths.get(s"$base/out_json")))
+    // the first arrival then runs as the direction's first round
+    val region = spark.read.parquet(s"${sf()}/region.parquet")
+    region.write.mode("append").parquet(s"$base/in_pq")
+    region.write.mode("append").json(s"$base/in_json")
+    DistMain.runDirection(spark, conf.direction("d"), "d")
+    assert(spark.read.parquet(s"$base/out_pq").count() == 5)
+    assert(spark.read.json(s"$base/out_json").count() == 5)
+  }
+
+  test("streaming task with a missing source path fails naming the path") {
+    val base = tmpDir("dist")
+    val conf = DistConfig.parse(s"""{"d": [{"streaming": true,
+      "source": {"adapter": "hadoopParquet", "path": "$base/missing"},
+      "dest":   {"adapter": "hadoopParquet", "path": "$base/out"}}]}""")
+    val e = intercept[IllegalArgumentException](
+      DistMain.runDirection(spark, conf.direction("d"), "d"))
+    assert(e.getMessage.contains(s"$base/missing"))
+    assert(!Files.exists(Paths.get(s"$base/out")))
+  }
+
   test("streaming ingest chain: score -> claim -> gate -> apply claims -> IVFADC encode") {
     // the whole ingest tier as ONE config-driven direction (round 16;
     // round 17 adds the claims-consuming filter stage): five
