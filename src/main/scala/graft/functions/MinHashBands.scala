@@ -111,8 +111,8 @@ case class MinHashBands(child: Expression, seeds: Seq[Long], rowsPerBand: Int)
     copy(child = newChild)
 }
 
-/** Registration-time builder (shared by GraftRuntime and the session
-  * extension): validates the literal seed array and row width. */
+/** Registration-time builder (the `minhash_bands` [[NativeFunctions]]
+  * entry): validates the literal seed array and row width. */
 object MinHashBands {
   import org.apache.spark.sql.types.{IntegerType, NumericType}
   import org.apache.spark.sql.catalyst.expressions.Cast

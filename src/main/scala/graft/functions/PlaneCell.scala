@@ -114,8 +114,8 @@ case class PlaneCell(child: Expression, bits: Int, prefix: String)
     copy(child = newChild)
 }
 
-/** Registration-time builder shared by [[GraftRuntime]] and the
-  * session-extension injection (ADVICE r13): validates the literal
+/** Registration-time builder (the `plane_cell` [[NativeFunctions]]
+  * entry; ADVICE r13): validates the literal
   * bits/prefix arguments BEFORE eval — an integral bits argument of
   * any width is accepted, a non-string prefix fails with a message
   * naming the argument instead of a ClassCastException. */

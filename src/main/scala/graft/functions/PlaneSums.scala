@@ -106,14 +106,13 @@ case class PlaneSums(child: Expression, weights: Seq[Seq[Double]])
     copy(child = newChild)
 }
 
-/** Registration-time builder shared VERBATIM by [[GraftRuntime]] and
-  * the session-extension injection (ADVICE r13: the two sites had
-  * drifted into duplicated lambdas, and neither validated types — a
-  * natural SQL call like `plane_sums(v, array(array(1.0, 2.0)))`
-  * produces DECIMAL literals, which the raw `getDouble` read died on
-  * with a bare ClassCastException). Numeric weight matrices are
-  * COERCED to double through a foldable Cast; anything else fails with
-  * a usable message naming the offending argument. */
+/** Registration-time builder (the `plane_sums` [[NativeFunctions]]
+  * entry; ADVICE r13). It validates types: a natural SQL call like
+  * `plane_sums(v, array(array(1.0, 2.0)))` produces DECIMAL literals,
+  * which a raw `getDouble` read dies on with a bare ClassCastException.
+  * Numeric weight matrices are COERCED to double through a foldable
+  * Cast; anything else fails with a usable message naming the offending
+  * argument. */
 object PlaneSums {
   import org.apache.spark.sql.catalyst.expressions.Cast
   import org.apache.spark.sql.types.NumericType

@@ -205,8 +205,8 @@ case class PqCodes(child: Expression, cb: Seq[Seq[Seq[Float]]])
     copy(child = newChild)
 }
 
-/** Registration-time builder shared by [[GraftRuntime]] and the session
-  * extension: validates the literal codebook and coerces numeric
+/** Registration-time builder (the `pq_codes` [[NativeFunctions]] entry):
+  * validates the literal codebook and coerces numeric
   * element types to FLOAT through a foldable Cast. */
 object PqCodes {
   import org.apache.spark.sql.catalyst.expressions.Cast

@@ -223,8 +223,8 @@ object SimhashBlockKeys {
     }.toArray
   }
 
-  /** Registration-time builder (shared by GraftRuntime and the session
-    * extension): validates the literal block count. */
+  /** Registration-time builder (the `simhash_block_keys`
+    * [[NativeFunctions]] entry): validates the literal block count. */
   def build(children: Seq[Expression]): Expression = {
     require(children.size == 2,
       s"simhash_block_keys expects (tokens, B), got ${children.size} arguments")

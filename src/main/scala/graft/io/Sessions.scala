@@ -11,11 +11,8 @@ import org.apache.spark.sql.SparkSession
   *    the setting that matters most at 100 TB;
   *  - `spark.sql.shuffle.partitions` sized to the local core count (the
   *    harness runs local[32]; on a real cluster this is overridden per job);
-  *  - UTC session timezone so timestamp semantics match the DuckDB oracle;
-  *  - `spark.sql.legacy.parquet.nanosAsLong=true`: the harness `events`
-  *    table stores TIMESTAMP(NANOS) which Spark 4 otherwise refuses
-  *    (PARQUET_TYPE_ILLEGAL); we read the raw ns longs and convert in
-  *    [[Tables]];
+  *  - the engine SQL confs ([[EngineSqlConfs]]), which
+  *    [[graft.functions.GraftRuntime.ensure]] also sets on a host session;
   *  - session artifact isolation off ([[ArtifactIsolation]]): the engine
   *    adds no session artifacts (no `addArtifact`/`addJar`), and with
   *    isolation on (the Spark 4 default) every session's tasks run under
@@ -38,18 +35,31 @@ object Sessions {
   def withSharedClassLoader(builder: SparkSession.Builder): SparkSession.Builder =
     builder.config(ArtifactIsolation, "false")
 
+  /** SQL confs the engine's results depend on, for a session built here
+    * and for one handed over by a host (set again at runtime by
+    * [[graft.functions.GraftRuntime.ensure]]; both are runtime confs):
+    *  - UTC session timezone: the cross-engine determinism contract is UTC
+    *    wall-clock arithmetic (docs/determinism.md), and a session left on
+    *    a local timezone would silently shift every instant↔NTZ cast;
+    *  - `spark.sql.legacy.parquet.nanosAsLong=true`: the harness `events`
+    *    table stores TIMESTAMP(NANOS) which Spark 4 otherwise refuses
+    *    (PARQUET_TYPE_ILLEGAL); we read the raw ns longs and convert in
+    *    [[Tables]]. */
+  val EngineSqlConfs: Map[String, String] = Map(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+
   def local(appName: String = "graft", cpus: String = defaultCpus): SparkSession = {
     val spark = withSharedClassLoader(SparkSession.builder())
+      .config(EngineSqlConfs)
       .appName(appName)
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.warehouse.dir",
         sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-warehouse")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // BloomFilterAggregate (the decontamination scale branch) silently
       // clamps its (numItems, numBits) arguments to these confs — the
       // defaults (4M items / 64M bits) kick in exactly when the eval set

@@ -13,9 +13,8 @@ import org.apache.spark.sql.functions._
   * the original columns in their original order with `ts` a µs-precision
   * TIMESTAMP_NTZ (truncation, matching DuckDB's ns→µs cast) in its
   * original slot, plus the raw ns-epoch long `ts_ns` appended last.
-  * Engine sessions are pinned to UTC ([[Sessions]] and
-  * [[graft.functions.GraftRuntime.ensure]]), which makes the
-  * instant↔NTZ casts below timezone-independent.
+  * Engine sessions are pinned to UTC ([[Sessions.EngineSqlConfs]]),
+  * which makes the instant↔NTZ casts below timezone-independent.
   */
 object Tables {
   val all: Seq[String] = Seq(

@@ -130,8 +130,9 @@ final case class AsOfJoinExec(
     copy(left = newLeft, right = newRight)
 }
 
-/** Planner strategy mapping the logical node to its exec, injected via
-  * [[graft.functions.GraftExtensions]]. */
+/** Planner strategy mapping the logical node to its exec, installed once
+  * per session by [[graft.functions.GraftExtensions]] or, on a session
+  * built without them, [[graft.functions.GraftRuntime.ensure]]. */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsOfJoinPlan(l, r, lk, rk, lt, rt, tol) =>

@@ -163,13 +163,10 @@ object StreamBench {
     //  - changelogCheckpointing writes the per-batch delta log and
     //    moves full-snapshot upload to background maintenance, instead
     //    of a foreground snapshot inside every micro-batch commit.
-    // SPARK_GRAFT_RDB_TUNE=0 restores the defaults (the A/B arm).
-    if (!sys.env.get("SPARK_GRAFT_RDB_TUNE").contains("0")) {
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "false")
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    }
+    spark.conf.set(
+      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "false")
+    spark.conf.set(
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
 
     // trained models fetched ONCE (train offline, encode the stream
     // online — the IVF-PQ ingest shape); both passes reuse them
